@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.sql.Timestamp
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{BankSource, DropFolder, FileSources}
@@ -9,7 +10,21 @@ import graft.sources.{BankSource, DropFolder, FileSources}
   * [[Warehouse]]: stage → SCD1-merge dims → meta watermarks → append
   * facts → build reports → ONE atomic commit → archive input files.
   *
-  * Ordering is the reference's (SURVEY §3 entry point 1), with one
+  * The reference runs these steps strictly in sequence, but most of
+  * them read only their own staging table, so a run is a three-stage
+  * DAG whose steps run as concurrent Spark jobs:
+  *  1. the six staging loads (three bank extracts, three file-fed
+  *     tables);
+  *  2. the four dim merges, the meta watermarks and the two fact
+  *     appends — each reads staging plus its own target only;
+  *  3. the reports (they read the merged dims and the appended facts),
+  *     then the single atomic commit.
+  * Steps run on a fixed pool created per run and shut down before
+  * `run` returns. A failing step waits for its siblings and is then
+  * rethrown; nothing is committed, and the dirs the run wrote stay
+  * unreferenced until `vacuum()` reclaims them.
+  *
+  * Semantics are the reference's (SURVEY §3 entry point 1), with one
   * deliberate fix: files are archived AFTER the commit, where the
   * reference renames them mid-run (main.py:70) and loses them if the
   * transaction later rolls back.
@@ -34,9 +49,6 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
   def run(bank: BankSource, dropDir: Option[String], runTs: Timestamp): Unit = {
     val ts = new Timestamp(runTs.getTime / 1000 * 1000)
     val txn = wh.begin()
-
-    // ---- staging: truncate (K1) happens implicitly — each stg table is
-    // rebuilt from scratch this run.
     val processed = lit(ts)
 
     // previous watermarks, ONE driver read of the (dims-sized) meta
@@ -55,36 +67,15 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
       case None => df
     }
 
-    txn.overwrite("stg_clients",
-      extract(bank.clients(spark), "dim_clients").withColumn("processed_dt", processed))
-    txn.overwrite("stg_accounts",
-      extract(bank.accounts(spark), "dim_accounts").withColumn("processed_dt", processed))
-    txn.overwrite("stg_cards",
-      extract(bank.cards(spark), "dim_cards").withColumn("processed_dt", processed))
-    txn.overwrite("stg_terminals", wh.emptyDf("stg_terminals"))
-    txn.overwrite("stg_transactions", wh.emptyDf("stg_transactions"))
-    txn.overwrite("stg_blacklist", wh.emptyDf("stg_blacklist"))
-
-    // ---- file ingestion (S4-S7): route, parse, append to staging
     val files = dropDir.map(DropFolder.discover).getOrElse(Nil)
-    files.foreach { f =>
-      val path = f.path.toString
-      f.kind match {
-        case DropFolder.Transactions =>
-          txn.append("stg_transactions", FileSources.transactionsCsv(spark, path))
-        case DropFolder.Terminals =>
-          txn.append("stg_terminals", FileSources.terminalsXlsx(spark, path,
-            Timestamp.valueOf(f.fileDate.atStartOfDay), ts))
-        case DropFolder.Blacklist =>
-          val df = FileSources.blacklistXlsx(spark, path)
-          val staged = mode match {
-            case Reports.Faithful => df // keep styled-empty (all-null) rows
-            case Reports.Corrected =>
-              df.filter(col("entry_dt").isNotNull || col("passport_num").isNotNull)
-          }
-          txn.append("stg_blacklist", staged)
-      }
-    }
+
+    // ---- file ingestion (S4-S7): route, parse, and load each file-fed
+    // staging table ONCE, from the union of its parsed files (an empty
+    // frame when the drop holds none of its kind)
+    def staged(table: String, kind: DropFolder.Kind)
+              (parse: DropFolder.DropFile => DataFrame): () => Unit = () =>
+      txn.overwrite(table, files.filter(_.kind == kind).map(parse)
+        .reduceOption(_ union _).getOrElse(wh.emptyDf(table)))
 
     // ---- SCD1 merge, one per dim (K4+K6+K7 via Scd1.mergeAudit).
     // Incremental mode: bank dims merge their delta with no delete path;
@@ -99,7 +90,7 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     // hard-linking the rest byte-identically. A run that changes nothing
     // in a dim writes NOTHING for it. At a 100 TB dim with ~1% daily
     // churn both the merge shuffle and the write shrink ~100×.
-    Schemas.dimKeys.keys.toSeq.sorted.foreach { dim =>
+    def mergeDim(dim: String): () => Unit = () => {
       val stg = "stg_" + dim.stripPrefix("dim_")
       val keys = Seq(Schemas.dimKeys(dim))
       val cmp = Schemas.dimCompareCols(dim)
@@ -136,24 +127,26 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     // after (main.py:359-366) overwrites it with the staging scalar —
     // which is NULL when staging is empty. Net effect each run: the row
     // exists and holds coalesce(max(update_dt), max(create_dt)) or NULL.
-    val metaRows = Schemas.dimKeys.keys.toSeq.sorted.map { dim =>
-      val stg = txn.read("stg_" + dim.stripPrefix("dim_"))
-      val wm = stg.agg(coalesce(max("update_dt"), max("create_dt"))).head().get(0)
-      val stgWm = Option(wm).map(_.asInstanceOf[Timestamp])
-      // incremental: an empty delta means "no change" — keep the previous
-      // watermark instead of faithfully overwriting it with NULL
-      val kept = if (incremental) stgWm.orElse(wmFor(dim)) else stgWm
-      ("deaian", "lapp_dwh_" + dim, kept)
+    def meta(): Unit = {
+      val metaRows = Schemas.dimKeys.keys.toSeq.sorted.map { dim =>
+        val stg = txn.read("stg_" + dim.stripPrefix("dim_"))
+        val wm = stg.agg(coalesce(max("update_dt"), max("create_dt"))).head().get(0)
+        val stgWm = Option(wm).map(_.asInstanceOf[Timestamp])
+        // incremental: an empty delta means "no change" — keep the previous
+        // watermark instead of faithfully overwriting it with NULL
+        val kept = if (incremental) stgWm.orElse(wmFor(dim)) else stgWm
+        ("deaian", "lapp_dwh_" + dim, kept)
+      }
+      import spark.implicits._
+      val metaNew = metaRows.toDF("schema_name", "table_name", "max_update_dt")
+      val metaKept = txn.read("meta").alias("m")
+        .join(metaNew.select(col("schema_name").as("s"), col("table_name").as("t")),
+          col("m.schema_name") === col("s") && col("m.table_name") === col("t"), "left_anti")
+      txn.overwrite("meta", metaKept.unionByName(metaNew))
     }
-    import spark.implicits._
-    val metaNew = metaRows.toDF("schema_name", "table_name", "max_update_dt")
-    val metaKept = txn.read("meta").alias("m")
-      .join(metaNew.select(col("schema_name").as("s"), col("table_name").as("t")),
-        col("m.schema_name") === col("s") && col("m.table_name") === col("t"), "left_anti")
-    txn.overwrite("meta", metaKept.unionByName(metaNew))
 
-    // ---- facts (K8): anti-join dedup append, blacklist first
-    // (main.py:390-391). Two fact-side defenses compose:
+    // ---- facts (K8): anti-join dedup append (main.py:390-391). Two
+    // fact-side defenses compose:
     //  - Bloom prune BELOW the join (graft.operators.BloomJoin): one
     //    filter built from the day's staging keys (ONE small-side
     //    action, reused across every fact dir), so fact ids that cannot
@@ -169,28 +162,64 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
     //    what keeps the big-delta regime safe: when the Bloom auto-sizer
     //    declines (too many staging keys to filter profitably), an
     //    unbucketed plan would shuffle the FULL 100 TB fact id set.
-    def appendFact(fact: String, stg: String, id: String): Unit =
-      txn.append(fact, freshFactRows(txn, fact, stg, id))
-    appendFact("fact_blacklist", "stg_blacklist", "passport_num")
-    appendFact("fact_transactions", "stg_transactions", "trans_id")
+    // Each fact reads only its own staging table and its own dirs, so
+    // the two appends are independent of each other and of the merges.
+    def appendFact(fact: String, stg: String, id: String): () => Unit =
+      () => txn.append(fact, freshFactRows(txn, fact, stg, id))
 
-    // ---- reports (K10): three appends, no dedup (reruns duplicate rows,
-    // as in the reference)
-    val fact = txn.read("fact_transactions")
-    val cards = txn.read("dim_cards")
-    val accounts = txn.read("dim_accounts")
-    val clients = txn.read("dim_clients")
-    val terminals = txn.read("dim_terminals")
-    val blacklist = txn.read("fact_blacklist")
-    txn.append("rep_fraud",
-      Reports.fraudExpiredPassport(fact, cards, accounts, clients, blacklist, mode))
-    txn.append("rep_fraud",
-      Reports.fraudInactiveAccount(fact, cards, accounts, clients))
-    txn.append("rep_fraud",
-      Reports.fraudCityHopping(fact, cards, terminals, accounts, clients))
+    // ---- stage 1: staging — truncate (K1) happens implicitly, each
+    // stg table is rebuilt from scratch this run
+    val staging: Seq[() => Unit] = Seq(
+      () => txn.overwrite("stg_clients",
+        extract(bank.clients(spark), "dim_clients").withColumn("processed_dt", processed)),
+      () => txn.overwrite("stg_accounts",
+        extract(bank.accounts(spark), "dim_accounts").withColumn("processed_dt", processed)),
+      () => txn.overwrite("stg_cards",
+        extract(bank.cards(spark), "dim_cards").withColumn("processed_dt", processed)),
+      staged("stg_transactions", DropFolder.Transactions)(f =>
+        FileSources.transactionsCsv(spark, f.path.toString)),
+      staged("stg_terminals", DropFolder.Terminals)(f =>
+        FileSources.terminalsXlsx(spark, f.path.toString,
+          Timestamp.valueOf(f.fileDate.atStartOfDay), ts)),
+      staged("stg_blacklist", DropFolder.Blacklist) { f =>
+        val df = FileSources.blacklistXlsx(spark, f.path.toString)
+        mode match {
+          case Reports.Faithful => df // keep styled-empty (all-null) rows
+          case Reports.Corrected =>
+            df.filter(col("entry_dt").isNotNull || col("passport_num").isNotNull)
+        }
+      })
+    // ---- stage 2: every step reads only staging and its own target
+    val loads: Seq[() => Unit] =
+      Schemas.dimKeys.keys.toSeq.sorted.map(mergeDim) ++ Seq(
+        () => meta(),
+        appendFact("fact_blacklist", "stg_blacklist", "passport_num"),
+        appendFact("fact_transactions", "stg_transactions", "trans_id"))
 
-    // ---- K11: one atomic commit, then (and only then) archive inputs
-    txn.commit()
+    val pool = Pipeline.newPool(math.max(staging.size, loads.size))
+    try {
+      Seq(staging, loads).foreach(Pipeline.runAll(pool, _))
+
+      // ---- stage 3, reports (K10): ONE append of the three reports'
+      // union, no dedup (reruns duplicate rows, as in the reference); one
+      // plan lets the dim broadcasts be reused across its branches
+      val fact = txn.read("fact_transactions")
+      val cards = txn.read("dim_cards")
+      val accounts = txn.read("dim_accounts")
+      val clients = txn.read("dim_clients")
+      txn.append("rep_fraud",
+        Reports.fraudExpiredPassport(fact, cards, accounts, clients,
+            txn.read("fact_blacklist"), mode)
+          .unionAll(Reports.fraudInactiveAccount(fact, cards, accounts, clients))
+          .unionAll(Reports.fraudCityHopping(fact, cards, txn.read("dim_terminals"),
+            accounts, clients)))
+
+      // ---- K11: one atomic commit, then (and only then) archive inputs
+      txn.commit()
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
     files.foreach(DropFolder.archive)
   }
 
@@ -205,6 +234,33 @@ class Pipeline(spark: SparkSession, wh: Warehouse,
 }
 
 object Pipeline {
+  private val threadIds = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** A fixed pool of `width` threads for one run. Its threads are
+    * created from the calling thread, so they inherit its Spark local
+    * properties (job group, scheduler pool, any caller tags) and its
+    * active session.
+    */
+  private def newPool(width: Int): ExecutorService =
+    Executors.newFixedThreadPool(width, { (r: Runnable) =>
+      val t = new Thread(r, s"graft-pipeline-${threadIds.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Run `steps` concurrently on `pool` and wait for ALL of them; then
+    * rethrow the first failure (in step order), so a failed step never
+    * leaves a sibling still writing when the caller unwinds.
+    */
+  private def runAll(pool: ExecutorService, steps: Seq[() => Unit]): Unit = {
+    val futures = steps.map(s => pool.submit[Unit](() => s()))
+    val failures = futures.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach(e => throw e)
+  }
+
   /** The rows of `batch` whose `id` is NOT already in `fact` — the K8
     * dedup plan, reusable against any incoming frame (nightly staging
     * or a streaming micro-batch): a batch-sized Bloom filter prunes

@@ -6,7 +6,7 @@ import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, to_date}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import scala.collection.mutable
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 /** Parquet-backed warehouse with snapshot-manifest semantics.
@@ -37,8 +37,11 @@ import scala.jdk.CollectionConverters._
   *
   * Dims additionally use a BUCKETED layout (`bucketSpec`: table → SCD1
   * key + bucket count): data dirs are written with Spark's bucketed
-  * writer (one file per key-hash bucket) and read back through an
-  * external bucketed table registration, so the nightly SCD1 merge
+  * writer (one file per key-hash bucket) and read back IN PLACE — a
+  * file-listing relation that takes its bucket spec from `bucketSpec`
+  * and its size from the file lengths, with no session-catalog table
+  * (nothing to register, drop or race on between concurrent writers;
+  * the dir's own layout is its metadata). So the nightly SCD1 merge
   * (a) plans with NO dim-side Exchange — the scan's HashPartitioning
   * satisfies the join's distribution from the files themselves — and
   * (b) via [[Txn.overwriteBuckets]] rewrites ONLY the buckets containing
@@ -115,9 +118,9 @@ class Warehouse(val spark: SparkSession, val root: String,
     if (dvDirs.isEmpty) {
       if (bucketSpec.contains(table) && dirs.length == 1)
         // single-dir bucketed table (the dim steady state — overwrites
-        // always leave exactly one dir): read through the bucketed
-        // registration so the scan carries HashPartitioning(key, n) and
-        // key-joins/aggregations need no dim-side Exchange
+        // always leave exactly one dir): read as a bucketed relation so
+        // the scan carries HashPartitioning(key, n) and key-joins/
+        // aggregations need no dim-side Exchange
         readBucketedDir(table, dirs.head).select(fields.map(col): _*)
       else if (!partitionSpec.contains(table))
         spark.read.schema(schema).parquet(dirs: _*)
@@ -217,7 +220,7 @@ class Warehouse(val spark: SparkSession, val root: String,
     *
     * Also the LAYOUT-REPAIR route: a single-dir table whose dir predates
     * its `bucketSpec` entry (files without bucket naming) cannot be read
-    * through the bucketed registration, so compacting a single-dir
+    * as a bucketed relation, so compacting a single-dir
     * bucketed table reads the dir as PLAIN parquet and rewrites it
     * through the bucketed writer — after which bucketed reads are sound.
     * (Re-compacting an already-bucketed dir is a harmless rewrite.)
@@ -409,7 +412,6 @@ class Warehouse(val spark: SparkSession, val root: String,
             if (Files.isDirectory(d) && !live.contains(d.toAbsolutePath.toString) &&
                 Files.getLastModifiedTime(d).toMillis < cutoff) {
               deleteRecursively(d); removed += 1
-              spark.sql(s"DROP TABLE IF EXISTS `${Warehouse.bucketedTableName(d.toString)}`")
             }
           }
       }
@@ -433,6 +435,20 @@ class Warehouse(val spark: SparkSession, val root: String,
     * `bucketSpec` entry write through the bucketed path instead.
     */
   private[etl] def writeDataDir(table: String, df: DataFrame): String = {
+    val dir = writeDataFiles(table, df)
+    // every data dir gets a file-stats sidecar at WRITE time (footers
+    // are hot in the page cache right now; partition subdirs walked
+    // recursively), so [[readSkipping]] prunes with zero per-file
+    // metadata I/O forever after — the dir is immutable.
+    graft.sources.DataSkipping.writeSidecar(spark, dir)
+    dir
+  }
+
+  /** [[writeDataDir]] without the stats sidecar — for writers that add
+    * more files (hard-linked carry-over buckets) before the dir is
+    * complete and then write the sidecar once themselves.
+    */
+  private[etl] def writeDataFiles(table: String, df: DataFrame): String = {
     val dir = newDataDir(table)
     (partitionSpec.get(table), bucketSpec.get(table)) match {
       case (Some((name, derive)), Some(_)) =>
@@ -448,11 +464,6 @@ class Warehouse(val spark: SparkSession, val root: String,
       case _ =>
         df.write.parquet(dir)
     }
-    // every data dir gets a file-stats sidecar at WRITE time (footers
-    // are hot in the page cache right now; partition subdirs walked
-    // recursively), so [[readSkipping]] prunes with zero per-file
-    // metadata I/O forever after — the dir is immutable.
-    graft.sources.DataSkipping.writeSidecar(spark, dir)
     dir
   }
 
@@ -517,64 +528,37 @@ class Warehouse(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Bucketed write via a throwaway external-table registration — the
-    * only API route to Spark's bucketed writer (which encodes the bucket
-    * id in each file name, the contract [[readBucketedDir]] and
-    * [[copyUntouchedBuckets]] rely on). The `repartition(n, key)` uses
-    * the SAME hash (`Murmur3` mod n) as the bucket assignment, so every
-    * task holds exactly one bucket's rows → exactly one file per
-    * non-empty bucket (which also keeps Spark trusting the SORTED BY
-    * metadata on read). Dropping the external table keeps the files.
+  /** Bucketed write with no catalog registration
+    * ([[org.apache.spark.sql.graftbridge.Bridge.writeBucketed]]): Spark's
+    * bucketed writer encodes the bucket id in each file name, the
+    * contract [[readBucketedDir]] and [[copyUntouchedBuckets]] rely on.
+    * The `repartition(n, key)` uses the SAME hash (`Murmur3` mod n) as
+    * the bucket assignment, so every task holds exactly one bucket's
+    * rows → exactly one file per non-empty bucket (which also keeps
+    * Spark trusting the sort order on read).
     */
   private def writeBucketedDir(table: String, df: DataFrame, dir: String,
                                partitionCol: Option[String]): Unit = {
     val (key, n) = bucketSpec(table)
-    val tmp = "graft_tmp_" + UUID.randomUUID().toString.replace("-", "")
-    val w = df.repartition(n, col(key)).write
-    partitionCol.fold(w)(w.partitionBy(_))
-      .bucketBy(n, key).sortBy(key)
-      .option("path", dir).format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$tmp`")
+    org.apache.spark.sql.graftbridge.Bridge.writeBucketed(spark,
+      df.repartition(n, col(key)), dir, key, n, partitionCol)
   }
 
-  /** Read one data dir as a BUCKETED table. Bucketing metadata lives in
-    * the session catalog, not the files, so each dir gets a
-    * deterministic external-table registration (name = digest of the
-    * path; dirs are immutable, so a registration never goes stale —
-    * [[vacuum]] drops it with the dir).
+  /** Read one data dir as a BUCKETED relation straight from its files
+    * ([[org.apache.spark.sql.graftbridge.Bridge.readBucketed]]): the
+    * bucket spec comes from `bucketSpec`, the partition column's type
+    * from the partition expression (so the read never drifts from what
+    * [[writeDataDir]] produced), and nothing touches the session
+    * catalog — concurrent readers of one dir share no state.
     */
   private[etl] def readBucketedDir(table: String, dir: String): DataFrame = {
     val (key, n) = bucketSpec(table)
-    val name = Warehouse.bucketedTableName(dir)
-    if (!spark.catalog.tableExists(name)) {
-      // partitioned+bucketed dirs (facts) declare the partition column
-      // too — its type is derived from the partition expression so the
-      // registration never drifts from what writeDataDir produced
-      val (cols, partClause) = partitionSpec.get(table) match {
-        case Some((p, derive)) =>
-          val pType = emptyDf(table).withColumn(p, derive).schema(p).dataType.sql
-          (s"${schemas(table).toDDL}, `$p` $pType", s"PARTITIONED BY (`$p`)")
-        case None => (schemas(table).toDDL, "")
-      }
-      spark.sql(
-        s"""CREATE TABLE `$name` ($cols)
-           |USING PARQUET
-           |$partClause
-           |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $n BUCKETS
-           |LOCATION '$dir'""".stripMargin)
-      // datasource tables with a LOCATION don't discover partitions on
-      // their own; dirs are immutable so one recovery at registration
-      // time is complete forever
-      if (partitionSpec.contains(table))
-        spark.sql(s"ALTER TABLE `$name` RECOVER PARTITIONS")
-      // a catalog table without stats planwise weighs Long.MaxValue —
-      // no plan reading it could ever choose a broadcast. NOSCAN fills
-      // in sizeInBytes from file sizes (metadata-only, once per
-      // immutable dir), so a small dim still broadcasts into report
-      // joins while a 100 TB scan keeps the co-located SMJ.
-      spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS NOSCAN")
+    val partSchema = partitionSpec.get(table) match {
+      case Some((p, derive)) => StructType(Seq(emptyDf(table).withColumn(p, derive).schema(p)))
+      case None => StructType(Nil)
     }
-    spark.table(name)
+    org.apache.spark.sql.graftbridge.Bridge.readBucketed(spark, dir, schemas(table),
+      partSchema, key, n)
   }
 
   /** Hard-link (fall back: copy — byte-identical either way) the files
@@ -792,11 +776,15 @@ class Warehouse(val spark: SparkSession, val root: String,
 
 /** One run's transaction: reads see committed state plus this txn's own
   * writes; nothing becomes visible to other readers until `commit()`
-  * swaps the catalog (K11).
+  * swaps the catalog (K11). Several threads may write DISTINCT tables
+  * of one txn concurrently (the steps of [[Pipeline.run]]); `commit()`
+  * runs after they have all finished.
   */
 class Txn private[etl] (private[etl] val wh: Warehouse) {
   private val snapshot: Map[String, Seq[String]] = wh.catalog()
-  private val pending = mutable.LinkedHashMap[String, Seq[String]]()
+  // concurrent map: steps of one run write DISTINCT tables from several
+  // threads ([[Pipeline.run]]), and every update of an entry is atomic
+  private val pending = TrieMap[String, Seq[String]]()
   private var committed = false
 
   /** Abandon the transaction without committing. begin() is a pure
@@ -861,10 +849,9 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     val current = currentDirs(table)
     require(current.length == 1,
       s"partial bucket overwrite needs exactly one current dir for $table, got ${current.length}")
-    val dir = wh.writeDataDir(table, align(table, touchedDf))
+    val dir = wh.writeDataFiles(table, align(table, touchedDf))
     wh.copyUntouchedBuckets(current.head, dir, touched.toSet)
-    // the hard-linked files landed after writeDataDir's sidecar pass —
-    // refresh it so the skipping stats cover the whole dir again
+    // one sidecar, after the hard links: its stats cover the whole dir
     graft.sources.DataSkipping.writeSidecar(wh.spark, dir)
     pending(table) = Seq(dir)
     remapDv(table, current.head, dir)
@@ -1028,7 +1015,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
           if (touched.isEmpty) d // untouched dir: zero bytes move
           else {
             val inT = Scd1.inBuckets(Seq(key), n, touched.toIndexedSeq)
-            val dir = wh.writeDataDir(table, align(table, part.filter(inT && keep)))
+            val dir = wh.writeDataFiles(table, align(table, part.filter(inT && keep)))
             wh.copyUntouchedBuckets(d, dir, touched.toSet)
             graft.sources.DataSkipping.writeSidecar(wh.spark, dir)
             dir
@@ -1078,7 +1065,7 @@ class Txn private[etl] (private[etl] val wh: Warehouse) {
     */
   def append(table: String, df: DataFrame): Unit = {
     val dir = wh.writeDataDir(table, align(table, df))
-    pending(table) = pending.getOrElse(table, snapshot.getOrElse(table, Nil)) :+ dir
+    pending.updateWith(table)(cur => Some(cur.getOrElse(snapshot.getOrElse(table, Nil)) :+ dir))
   }
 
   /** Append with COMMIT-TIME CONSTRAINTS: the batch is audited against
@@ -1289,12 +1276,6 @@ object Warehouse {
   private[etl] val dvSchema: StructType = StructType(Seq(
     StructField(DvFile, StringType, nullable = false),
     StructField(DvPos, LongType, nullable = false)))
-
-  /** Deterministic registration name for a bucketed data dir. */
-  private[etl] def bucketedTableName(dir: String): String =
-    "graft_bkt_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(20)
 }
 
 /** Minimal JSON for `Map[String, Seq[String]]` — no external deps in the

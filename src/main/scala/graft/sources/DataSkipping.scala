@@ -199,11 +199,26 @@ object DataSkipping {
     }
     // footer reads are independent metadata I/O — read them in parallel
     // (a 64-bucket dir is 64+ sequential opens otherwise; this is the
-    // commit path of every warehouse txn)
-    import scala.collection.parallel.CollectionConverters._
-    walk(root).par.map(p =>
-      statsOfFile(conf, new Path(p.toUri))
-        .copy(name = root.relativize(p).toString)).seq
+    // commit path of every warehouse txn) on the bounded footer pool, so
+    // concurrent commits never saturate the common ForkJoinPool
+    walk(root).map(p => FooterPool.submit[FileStats](() =>
+      statsOfFile(conf, new Path(p.toUri)).copy(name = root.relativize(p).toString)))
+      .map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+  }
+
+  /** The footer reads' own small pool of daemon threads, shared by every
+    * concurrent [[collectStats]] walk.
+    */
+  private lazy val FooterPool: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(4, { (r: Runnable) =>
+      val t = new Thread(r, s"graft-footer-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
   }
 
   // -------------------------------------------------------------------

@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression and LogicalPlan → DataFrame bridges. Spark 4
   * hides the classic converters behind `private[sql]`; custom-operator
@@ -48,6 +49,60 @@ object Bridge {
   def toInternalRows(df: DataFrame)
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.queryExecution.toRdd.map(_.copy())
+
+  /** Write `df` into the fresh dir `dir` in Spark's BUCKETED layout —
+    * one file per non-empty bucket per task, the bucket id encoded in
+    * the file name (`part-…_000NN.c000.snappy.parquet`) — with no
+    * catalog table: the `InsertIntoHadoopFsRelationCommand` that
+    * `saveAsTable(…bucketBy…)` plans, built directly with a
+    * `BucketSpec` and `catalogTable = None`. `partitionCol` adds a
+    * `<col>=<value>` directory level above the bucket files. The
+    * command runs eagerly, like every command `Dataset.ofRows` is given.
+    */
+  def writeBucketed(spark: SparkSession, df: DataFrame, dir: String,
+                    bucketCol: String, numBuckets: Int,
+                    partitionCol: Option[String]): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val query = df.queryExecution.analyzed
+    val resolver = spark.sessionState.conf.resolver
+    ofRows(spark, InsertIntoHadoopFsRelationCommand(
+      outputPath = new org.apache.hadoop.fs.Path(dir),
+      staticPartitions = Map.empty,
+      ifPartitionNotExists = false,
+      partitionColumns = query.output.filter(a => partitionCol.exists(resolver(a.name, _))),
+      bucketSpec = Some(BucketSpec(numBuckets, Seq(bucketCol), Seq(bucketCol))),
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty,
+      query = query,
+      mode = SaveMode.ErrorIfExists,
+      catalogTable = None,
+      fileIndex = None,
+      outputColumnNames = query.output.map(_.name)))
+  }
+
+  /** Read one dir written by [[writeBucketed]] as a BUCKETED relation,
+    * from its files alone: the listing comes from an `InMemoryFileIndex`
+    * (partition values typed by `partitionSchema`), the bucketing from
+    * the `BucketSpec` given here, and the size the planner weighs for a
+    * broadcast from the index's file sizes. The scan carries
+    * HashPartitioning(bucketCol, numBuckets), so joins and aggregations
+    * on the bucket key need no Exchange on this side.
+    */
+  def readBucketed(spark: SparkSession, dir: String, dataSchema: StructType,
+                   partitionSchema: StructType, bucketCol: String,
+                   numBuckets: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val index = new InMemoryFileIndex(spark, Seq(new org.apache.hadoop.fs.Path(dir)),
+      Map.empty[String, String], Some(StructType(dataSchema.fields ++ partitionSchema.fields)))
+    val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema,
+      Some(BucketSpec(numBuckets, Seq(bucketCol), Seq(bucketCol))),
+      new ParquetFileFormat, Map.empty[String, String])(spark)
+    ofRows(spark, LogicalRelation(rel))
+  }
 
   /** Every "t<version>/<name>"-suffixed file a FileStreamSource
     * checkpoint's source ledger attributes to a batch ≤ `maxBatchId` —

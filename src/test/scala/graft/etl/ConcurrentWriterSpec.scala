@@ -39,6 +39,41 @@ class ConcurrentWriterSpec extends AnyFunSuite {
     assert(wh.read("b").count() == 1)
   }
 
+  test("eight threads write eight distinct tables of ONE txn; commit keeps every dir") {
+    // half bucketed (concurrent bucketed writes and reads), half flat;
+    // even tables are overwritten, odd ones appended to
+    val names = (0 until 8).map(i => s"t$i")
+    val wh = new Warehouse(spark, Files.createTempDirectory("whconc8").toString,
+      names.map(_ -> schema).toMap, partitionSpec = Map.empty,
+      bucketSpec = names.take(4).map(_ -> ("id", 4)).toMap)
+    val t0 = wh.begin()
+    names.foreach(t => t0.overwrite(t, Seq((0L, t)).toDF("id", "v")))
+    t0.commit()
+    val old = wh.catalog()
+    val txn = wh.begin()
+    val start = new java.util.concurrent.CyclicBarrier(names.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+    try {
+      val futures = names.zipWithIndex.map { case (t, i) =>
+        pool.submit[Unit] { () =>
+          val rows = (1L to 20L).map(id => (id, s"$t-$id")).toDF("id", "v")
+          start.await()
+          if (i % 2 == 0) txn.overwrite(t, txn.read(t).unionByName(rows))
+          else txn.append(t, rows)
+        }
+      }
+      futures.foreach(_.get())
+    } finally pool.shutdown()
+    txn.commit()
+    val cat = wh.catalog()
+    names.zipWithIndex.foreach { case (t, i) =>
+      if (i % 2 == 0) assert(cat(t).length == 1 && cat(t) != old(t), s"$t: ${cat(t)}")
+      else assert(cat(t).length == 2 && cat(t).head == old(t).head, s"$t: ${cat(t)}")
+      cat(t).foreach(d => assert(Files.isDirectory(java.nio.file.Paths.get(d)), d))
+      assert(wh.read(t).count() == 21, t)
+    }
+  }
+
   test("same-table conflict fails loudly; first committer wins") {
     val wh = freshWh()
     val t0 = wh.begin()

@@ -176,6 +176,26 @@ class WarehouseBucketingSpec extends AnyFunSuite {
       .head().getAs[String]("phone") == "+7 777")
   }
 
+  test("a full nightly run registers nothing in the session catalog") {
+    // bucketed dirs are written and read from their files alone: two
+    // nights cover the initial load, the partial bucket rewrite and the
+    // per-dir bucketed fact reads of the dedup cascade
+    val root = Files.createTempDirectory("wh-bkt-catalog")
+    val drop = Files.createTempDirectory("wh-bkt-catalog-drop")
+    val wh = new Warehouse(spark, root.toString)
+    try {
+      val before = spark.catalog.listTables().collect().map(_.name).toSet
+      val pipe = new Pipeline(spark, wh, Reports.Faithful)
+      PipelineSpec.writeTransactions(drop, "transactions_01032021.txt", Seq(1, 2, 3))
+      pipe.run(PipelineSpec.bank, Some(drop.toString), mar1)
+      PipelineSpec.writeTransactions(drop, "transactions_02032021.txt", Seq(3, 4, 5))
+      pipe.run(PipelineSpec.bank, Some(drop.toString), mar2)
+      assert(wh.read("fact_transactions").count() == 5)
+      val after = spark.catalog.listTables().collect().map(_.name).toSet
+      assert(after == before, s"the run registered tables: ${after -- before}")
+    } finally Seq(root, drop).foreach(wh.deleteRecursively)
+  }
+
   test("fact compaction preserves the partitioned+bucketed layout") {
     // compact() routes through the same writeDataDir as appends, so the
     // merged dir must carry BOTH layout halves: date subdirs (pruning)
